@@ -28,7 +28,6 @@ from nimble_spark.functions.text_fns import (
     shingles_sql_spark,
 )
 from nimble_spark.functions.exact import rnd
-from nimble_spark.functions.partitioning import attach_small
 from nimble_spark.registry import register
 from nimble_spark.tables import load
 
@@ -266,7 +265,6 @@ def lsh_near_pairs(
     sig: DataFrame,
     shingles: DataFrame,
     bucket_cap: int = _LSH_BUCKET_CAP,
-    shingles_materialized: bool = False,
 ) -> DataFrame:
     """MinHash-LSH near-duplicate pairs from a signature table
     (doc_id, mh0..mh7) and a shingle table (doc_id, sh): 4 bands × 2
@@ -291,19 +289,6 @@ def lsh_near_pairs(
         "sh",
         F.array_distinct(F.expr(f"transform(sh, s -> {hash60_sql_spark('s')})")),
     )
-    # Consumed by BOTH verify attaches (id_a and id_b projections are
-    # different plans, so neither exchange nor broadcast reuse can
-    # deduplicate them): materialize the per-doc hashed sets (lazy
-    # localCheckpoint, not persist — registered caches tax every later
-    # plan in the session) so the tokenize/shingle/hash pipeline runs
-    # once per execution. Skipped when the CALLER already materialized
-    # the shingle base (each consumer then re-runs only the cheap
-    # hash60 transform over the checkpointed arrays — a second
-    # checkpoint here was A/B-measured a net loss: every lazy
-    # localCheckpoint costs ~1 s of JVM planning at construction).
-    # failure semantics: SCALE.md § 'localCheckpoint failure semantics'
-    if not shingles_materialized:
-        shingles = shingles.localCheckpoint(eager=False)
 
     # Explode one struct array instead of unioning 4 selects: the
     # minhash pipeline is evaluated once, not once per band.
@@ -343,16 +328,14 @@ def lsh_near_pairs(
         .distinct()
     )
     # Verify-attach: pairs are the (capped-)quadratic side, the
-    # per-doc hashed shingle sets the small one — broadcast the sets,
-    # so the Jaccard verify runs map-side and no exchange ever
-    # carries shingle arrays (guide §3.1: the two shuffle_hash
-    # attaches each cost a pair-set exchange with arrays in flight).
-    # SIZE-AWARE: the set table is O(corpus), so past the configured
-    # broadcast cap attach_small degrades to the scale-safe
-    # shuffle-hash shape instead of OOMing the driver at 100 TB.
+    # per-doc hashed shingle sets the small one. Spark's broadcast
+    # threshold picks the attach strategy: below it the sets broadcast
+    # and the Jaccard verify runs map-side; the set table is
+    # O(corpus), so past it (or unestimated) the planner falls back to
+    # a shuffle join instead of OOMing the driver at 100 TB.
     cand = (
-        cand.join(attach_small(shingles.select(F.col("doc_id").alias("id_a"), F.col("sh").alias("sh_a"))), "id_a")
-        .join(attach_small(shingles.select(F.col("doc_id").alias("id_b"), F.col("sh").alias("sh_b"))), "id_b")
+        cand.join(shingles.select(F.col("doc_id").alias("id_a"), F.col("sh").alias("sh_a")), "id_a")
+        .join(shingles.select(F.col("doc_id").alias("id_b"), F.col("sh").alias("sh_b")), "id_b")
     )
     inter = F.size(F.array_intersect("sh_a", "sh_b"))
     jac = inter.cast("double") / (F.size("sh_a") + F.size("sh_b") - inter)
@@ -366,22 +349,10 @@ def lsh_near_pairs(
 @register("q_minhash_lsh_pairs", oracle=_LSH_PAIRS_DUCK, category="dedup")
 def q_minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash-LSH near-duplicate pairs over the documents corpus —
-    see lsh_near_pairs for the banding/cap/verify shape.
-
-    The tokenize+shingle pass is materialized ONCE (lazy
-    localCheckpoint) and feeds BOTH the signature pipeline and the
-    verify-set table — r11 ran it twice, once per consumer (guide
-    §1.2 don't compute things twice). shingles_materialized=True
-    skips the inner hashed-set checkpoint (A/B: the second
-    checkpoint's construction-time planning cost more than the saved
-    hash60 re-run)."""
-    base = (
-        # failure semantics: SCALE.md § 'localCheckpoint failure semantics'
-        _shingled(spark, sf_dir).select("doc_id", "sh").localCheckpoint(eager=False)
-    )
-    return lsh_near_pairs(
-        _sig_from_shingles(base), base, shingles_materialized=True
-    )
+    see lsh_near_pairs for the banding/cap/verify shape. One shingle
+    base feeds both the signature pipeline and the verify-set table."""
+    base = _shingled(spark, sf_dir).select("doc_id", "sh")
+    return lsh_near_pairs(_sig_from_shingles(base), base)
 
 
 # ---------------------------------------------------------------------------
@@ -608,12 +579,7 @@ def q_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load(spark, sf_dir, "documents")
     is_batch = F.col("doc_id") % 2 == 1
 
-    # Exact layer: batch digests probe corpus digests. NOT
-    # checkpointed (unlike sh_t below): the r12 checkpoint A/B showed
-    # each lazy localCheckpoint costs ~1 s of JVM physical planning at
-    # CONSTRUCTION time, and the digest pipeline it would save is one
-    # scan + md5 — recomputing it per consumer is cheaper than the
-    # planning tax (A/B in OPTIMIZATION_r12.md).
+    # Exact layer: batch digests probe corpus digests.
     dig = d.select("doc_id", F.md5("text").alias("h"))
     ex = (
         dig.filter(is_batch)
@@ -624,16 +590,9 @@ def q_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     # Near layer: asymmetric banded MinHash join, hashed-shingle
-    # verify. One shared shingle base feeds BOTH the signature
-    # pipeline and the verify sets (r11 ran the tokenize+shingle
-    # pass 4×: twice under the band-join sides, twice under the
-    # verify attaches — guide §1.2 don't compute things twice). This
-    # is the ONE checkpoint this query keeps: the tokenize+shingle
-    # subtree is the expensive shared producer; checkpointing the
-    # derived signature table as well was A/B-measured a net loss
-    # (construction-time planning > the saved re-execution).
-    # failure semantics: SCALE.md § 'localCheckpoint failure semantics'
-    sh_t = _shingled(spark, sf_dir).select("doc_id", "sh").localCheckpoint(eager=False)
+    # verify. One shingle base feeds both the signature pipeline and
+    # the verify sets.
+    sh_t = _shingled(spark, sf_dir).select("doc_id", "sh")
     sig = _sig_from_shingles(sh_t)
     shh = sh_t.select(
         "doc_id",
@@ -664,18 +623,14 @@ def q_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.col("b.doc_id").alias("bid"), F.col("c.doc_id").alias("cid"))
         .distinct()
     )
-    # Verify-attach, size-aware (see attach_small): each side only
-    # needs its own parity's sets, so the attach tables are halved
-    # before the broadcast/shuffle decision.
+    # Verify-attach: each side only needs its own parity's sets, so
+    # the attach tables are halved before Spark's broadcast threshold
+    # picks broadcast or shuffle for each.
     ver = cand.join(
-        attach_small(
-            shh.filter(is_batch).select(F.col("doc_id").alias("bid"), F.col("shh").alias("sh_b"))
-        ),
+        shh.filter(is_batch).select(F.col("doc_id").alias("bid"), F.col("shh").alias("sh_b")),
         "bid",
     ).join(
-        attach_small(
-            shh.filter(~is_batch).select(F.col("doc_id").alias("cid"), F.col("shh").alias("sh_c"))
-        ),
+        shh.filter(~is_batch).select(F.col("doc_id").alias("cid"), F.col("shh").alias("sh_c")),
         "cid",
     )
     inter = F.size(F.array_intersect("sh_b", "sh_c"))
@@ -760,11 +715,6 @@ def q_ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.array_distinct(F.expr(f"transform(sh, s -> {hash60_sql_spark('s')})")),
         )
         .select("doc_id", "sh", F.size("sh").alias("sz"))
-        # three consumers (the posting explode + both verify attaches)
-        # with mutually un-reusable plans: materialize once (lazy
-        # localCheckpoint, not persist — see lsh_near_pairs note)
-        # failure semantics: SCALE.md § 'localCheckpoint failure semantics'
-        .localCheckpoint(eager=False)
     )
     # explode_outer, NOT explode: plain explode makes the optimizer
     # infer a `size(sh) > 0` filter and push it below the projection,
@@ -800,16 +750,15 @@ def q_ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
     )
     # Verify-attach: the candidate-pair set is the bigger side; the
-    # per-doc shingle-set table is the small side, so broadcast it —
-    # the array_intersect verify then runs map-side with no pair-row
-    # exchange (guide §3.1). SIZE-AWARE via attach_small: past the
-    # configured broadcast cap the attach degrades to shuffle-hash
-    # (the pair set is always the bigger side, but the set table is
-    # O(corpus) and must never be an unconditional broadcast).
+    # per-doc shingle-set table is the small side. Spark's broadcast
+    # threshold picks the attach strategy: below it the sets
+    # broadcast and the array_intersect verify runs map-side (guide
+    # §3.1); the set table is O(corpus), so past it the planner falls
+    # back to a shuffle join rather than an unconditional broadcast.
     sets = sh_t.select("doc_id", "sh")
     cand = cand.join(
-        attach_small(sets.select(F.col("doc_id").alias("id_a"), F.col("sh").alias("sh_a"))), "id_a"
-    ).join(attach_small(sets.select(F.col("doc_id").alias("id_b"), F.col("sh").alias("sh_b"))), "id_b")
+        sets.select(F.col("doc_id").alias("id_a"), F.col("sh").alias("sh_a")), "id_a"
+    ).join(sets.select(F.col("doc_id").alias("id_b"), F.col("sh").alias("sh_b")), "id_b")
     inter = F.size(F.array_intersect("sh_a", "sh_b"))
     jac = inter.cast("double") / (F.size("sh_a") + F.size("sh_b") - inter)
     return (

@@ -20,7 +20,6 @@ from pyspark.sql import functions as F
 
 from nimble_spark.functions.text_fns import hash32_sql_duck, hash32_sql_spark
 from nimble_spark.functions.exact import rnd, rnd_sql
-from nimble_spark.functions.partitioning import attach_small
 from nimble_spark.registry import register
 from nimble_spark.tables import load
 
@@ -374,16 +373,16 @@ def q_embedding_neardup_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.col("a.vec_id").alias("id_a"), F.col("b.vec_id").alias("id_b"))
     )
     # Verify-attach: the candidate set (up to n²/4-per-band pairs) is
-    # FAR larger than the vector table it joins, so broadcast the
-    # vector side (guide §3.1: broadcast the side that fits) — the
-    # pair set then streams map-locally through both attaches instead
-    # of being shuffled twice with 64-float arrays in flight (measured
-    # r11: the two shuffle_hash attaches moved ~0.5 GB of arrays at
-    # sf0.1 and dominated the query; broadcast-attach removes both
-    # pair exchanges). SIZE-AWARE via attach_small: past the
-    # configured broadcast cap the attach degrades to the scale-safe
-    # shuffle-hash shape — the vector table is O(corpus) and must
-    # never be an unconditional broadcast at 100 TB.
+    # FAR larger than the vector table it joins, so the vector side
+    # is the one to broadcast (guide §3.1: broadcast the side that
+    # fits) — the pair set then streams map-locally through both
+    # attaches instead of being shuffled twice with 64-float arrays in
+    # flight (measured r11: the two shuffle_hash attaches moved ~0.5 GB
+    # of arrays at sf0.1 and dominated the query; broadcast-attach
+    # removes both pair exchanges). Spark's broadcast threshold makes that pick:
+    # the vector table is O(corpus), so past the threshold the planner
+    # falls back to a shuffle join — never an unconditional broadcast
+    # at 100 TB.
     #
     # The pair set leaves the band join partitioned by (j, bv) — at
     # most 16 distinct values, so the dot-product verify would run at
@@ -395,10 +394,10 @@ def q_embedding_neardup_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     cand = cand.repartition(npart)
     emb = sig.select("vec_id", "embedding", "nrm")
     cand = cand.join(
-        attach_small(emb.select(F.col("vec_id").alias("id_a"), F.col("embedding").alias("e_a"), F.col("nrm").alias("n_a"))),
+        emb.select(F.col("vec_id").alias("id_a"), F.col("embedding").alias("e_a"), F.col("nrm").alias("n_a")),
         "id_a",
     ).join(
-        attach_small(emb.select(F.col("vec_id").alias("id_b"), F.col("embedding").alias("e_b"), F.col("nrm").alias("n_b"))),
+        emb.select(F.col("vec_id").alias("id_b"), F.col("embedding").alias("e_b"), F.col("nrm").alias("n_b")),
         "id_b",
     )
     sim = F.expr(_DOT_SPARK.format(a="e_a", b="e_b")) / (F.col("n_a") * F.col("n_b"))
