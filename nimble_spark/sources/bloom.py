@@ -5,111 +5,168 @@ The reference attaches split-block bloom filters to its index streams
 unbucketed data can skip whole stripes without touching values. The
 Spark-native analogue: parquet's own column-level bloom filters,
 written via ``parquet.bloom.filter.enabled#col`` (WriteOptions.
-bloom_cols) and probed here straight from the file footers through the
-JVM's ParquetFileReader — a metadata-only read (footer + bloom bytes,
-no data pages).
+bloom_cols) and probed through the JVM's ParquetFileReader — a
+metadata-only read (footer + bloom bytes, no data pages). On unsorted
+data every file's min/max spans the key domain, so blooms are the
+only skip mechanism.
 
-``bloom_prune_files`` is the scan-path entry: given a probe set, keep
-only the files whose bloom for the key column might contain at least
-one probe value. On unsorted data min/max pruning keeps every file
-(each file's range spans the whole key domain), so blooms are the only
-skip mechanism — the exact niche the reference built its BloomFilter
-index for.
+The index answers one question — "can this file hold any of these
+keys?" — along one path:
 
-Scale posture: probing is driver-side but metadata-bounded —
-O(n_files × n_probe_values) bloom tests over footers that the
-manifest-build step already reads; no data rows ever reach the
-driver. A cluster deployment would additionally cache the bloom bytes
-in the table manifest at write time (same lifecycle as the min/max
-stats) so lookups touch no file at all; the probe API here is the
-shape that cache would serve.
+* one reader: ``_footer_blooms`` opens a data file once and returns
+  its key column's bloom per row group and parquet primitive type, or
+  "cannot veto" when a row group has no bloom. The footer probe,
+  ``build_bloom_sidecar`` and ``explain_pruning`` all use it;
+* one hash per probe value per call: each value is encoded to
+  parquet's plain bytes in Python and hashed once with parquet's own
+  ``XxHash``, the hash ``BlockSplitBloomFilter`` used when writing;
+* one loop: ``_kept`` keeps a file when any of its blooms may hold any
+  probe hash, reading the blooms from the sidecar when it covers every
+  manifest file, else from the footers.
+
+Only the (Spark type, primitive) pairs in ``_PLAIN`` are encoded. Any
+other key type (decimal, timestamp), a probe value of another Python
+type, or a file storing another primitive cannot veto: the file is
+kept. No data rows ever reach the driver.
 """
 
 from __future__ import annotations
 
+import datetime
+import numbers
 import os
-from typing import Any, Iterable
+import struct
+from typing import Any, Callable, Iterable
 
 from pyspark.sql import SparkSession
 
-
-def _hash_value(jvm, gw, bloom, primitive: str, v: Any):
-    """Hash one probe value with the bloom's own hash function, forcing
-    the overload that matches the column's parquet primitive type.
-
-    py4j's automatic dispatch picks ``hash(int)`` for small Python
-    ints, which silently disagrees with the ``hash(long)`` the writer
-    used on INT64 columns — every membership test would come back
-    False. Reflection with an explicit parameter-type array pins the
-    right overload; Method.invoke unboxes the wrapper to the
-    primitive.
-    """
-    if primitive == "INT64":
-        cls, box = jvm.java.lang.Long.TYPE, jvm.java.lang.Long.valueOf(int(v))
-    elif primitive == "INT32":
-        cls, box = jvm.java.lang.Integer.TYPE, jvm.java.lang.Integer.valueOf(int(v))
-    elif primitive == "DOUBLE":
-        cls, box = jvm.java.lang.Double.TYPE, jvm.java.lang.Double.valueOf(float(v))
-    elif primitive == "FLOAT":
-        cls, box = jvm.java.lang.Float.TYPE, jvm.java.lang.Float.valueOf(float(v))
-    elif primitive == "BINARY":
-        cls = jvm.java.lang.Class.forName("org.apache.parquet.io.api.Binary")
-        box = jvm.org.apache.parquet.io.api.Binary.fromString(str(v))
-    else:
-        return None
-    cls_arr = gw.new_array(jvm.java.lang.Class, 1)
-    cls_arr[0] = cls
-    arg_arr = gw.new_array(jvm.java.lang.Object, 1)
-    arg_arr[0] = box
-    return bloom.getClass().getMethod("hash", cls_arr).invoke(bloom, arg_arr)
-
-
-def bloom_probe_file(
-    spark: SparkSession, file_path: str, column: str, values: Iterable[Any]
-) -> dict[str, Any]:
-    """Probe one parquet file's bloom filter(s) for `column`.
-
-    Returns ``{"has_bloom": bool, "maybe": bool}`` — ``maybe`` is True
-    when ANY row group's bloom might contain ANY probe value (or when
-    no bloom / unsupported type, i.e. probing can never veto a read it
-    isn't sure about).
-    """
-    jvm = spark._jvm
-    gw = spark.sparkContext._gateway
-    conf = spark._jsc.hadoopConfiguration()
-    jpath = jvm.org.apache.hadoop.fs.Path(file_path)
-    infile = jvm.org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(jpath, conf)
-    reader = jvm.org.apache.parquet.hadoop.ParquetFileReader.open(infile)
-    has_bloom = False
-    try:
-        footer = reader.getFooter()
-        for bi in range(footer.getBlocks().size()):
-            block = footer.getBlocks().get(bi)
-            cols = block.getColumns()
-            kcol = None
-            for ci in range(cols.size()):
-                if cols.get(ci).getPath().toDotString() == column:
-                    kcol = cols.get(ci)
-                    break
-            if kcol is None or kcol.getBloomFilterOffset() < 0:
-                return {"has_bloom": has_bloom, "maybe": True}
-            bloom = reader.getBloomFilterDataReader(block).readBloomFilter(kcol)
-            if bloom is None:
-                return {"has_bloom": has_bloom, "maybe": True}
-            has_bloom = True
-            primitive = kcol.getPrimitiveType().getPrimitiveTypeName().name()
-            for v in values:
-                h = _hash_value(jvm, gw, bloom, primitive, v)
-                if h is None:  # unsupported type — cannot veto
-                    return {"has_bloom": has_bloom, "maybe": True}
-                if bloom.findHash(h):
-                    return {"has_bloom": True, "maybe": True}
-        return {"has_bloom": has_bloom, "maybe": False}
-    finally:
-        reader.close()
-
-
 SIDECAR_DIR = os.path.join("_nimble", "index", "bloom")
+
+_EPOCH = datetime.date(1970, 1, 1)
+_I32 = struct.Struct("<i").pack
+
+# Key's Spark type -> (parquet primitive it is written as, Python probe
+# types, parquet plain encoding). The bloom hashes exactly these bytes.
+_PLAIN: dict[str, tuple[str, Any, Callable[[Any], bytes]]] = {
+    "long": ("INT64", numbers.Integral, struct.Struct("<q").pack),
+    "integer": ("INT32", numbers.Integral, _I32),
+    "short": ("INT32", numbers.Integral, _I32),
+    "byte": ("INT32", numbers.Integral, _I32),
+    "date": ("INT32", datetime.date, lambda v: _I32((v - _EPOCH).days)),
+    "float": ("FLOAT", float, struct.Struct("<f").pack),
+    "double": ("DOUBLE", float, struct.Struct("<d").pack),
+    "string": ("BINARY", str, lambda v: v.encode("utf-8")),
+    "binary": ("BINARY", (bytes, bytearray), bytes),
+}
+
+
+def _probe_hashes(spark: SparkSession, types: Any, encode, values: list) -> list[int] | None:
+    """Each probe value's bloom hash, or None when any value cannot be
+    encoded exactly — the probe then cannot veto any file."""
+    xx = spark._jvm.org.apache.parquet.column.values.bloomfilter.XxHash()
+    hashes = []
+    for v in values:
+        # bool is an int and datetime a date to isinstance, not to Spark
+        if isinstance(v, (bool, datetime.datetime)) or not isinstance(v, types):
+            return None
+        # Spark equates 0.0 with -0.0 and NaN with NaN; the bloom hashed bits
+        if isinstance(v, float) and (v == 0 or v != v):
+            return None
+        try:
+            hashes.append(xx.hashBytes(encode(v)))
+        except (struct.error, OverflowError):  # out of the column's range
+            return None
+    return hashes
+
+
+def _footer_blooms(spark: SparkSession, column: str) -> Callable[[str], tuple | None]:
+    """The one footer reader: returns ``read(path)``, which opens a data
+    file once and gives ``(primitive, blooms)`` — the column's parquet
+    primitive type name and its bloom per row group — or None ("cannot
+    veto") when the file lacks the column or any row group lacks a
+    bloom. JVM classes are resolved once here, not per file."""
+    jvm = spark._jvm
+    conf = spark._jsc.hadoopConfiguration()
+    Path = jvm.org.apache.hadoop.fs.Path
+    InputFile = jvm.org.apache.parquet.hadoop.util.HadoopInputFile
+    Reader = jvm.org.apache.parquet.hadoop.ParquetFileReader
+
+    def read(path: str) -> tuple | None:
+        reader = Reader.open(InputFile.fromPath(Path(path), conf))
+        try:
+            blocks = reader.getRowGroups()
+            primitive, ci, blooms = None, None, []
+            for bi in range(blocks.size()):
+                cols = blocks.get(bi).getColumns()
+                if ci is None:
+                    # chunks follow the schema's leaf order in every row group
+                    ci = next(
+                        (i for i in range(cols.size())
+                         if cols.get(i).getPath().toDotString() == column),
+                        None,
+                    )
+                    if ci is None:
+                        return None
+                kcol = cols.get(ci)
+                # null when the chunk was written without a bloom
+                bloom = reader.readBloomFilter(kcol)
+                if bloom is None:
+                    return None
+                if primitive is None:
+                    primitive = kcol.getPrimitiveType().getPrimitiveTypeName().name()
+                blooms.append(bloom)
+            return primitive, blooms
+        finally:
+            reader.close()
+
+    return read
+
+
+def _sidecar_blooms(
+    spark: SparkSession, root: str, manifest: dict, key: str
+) -> dict[str, tuple] | None:
+    """``{file: (primitive, blooms)}`` from the sidecar, or None when it
+    is absent or does not cover every manifest file (e.g. after
+    compaction rewrote files)."""
+    import pyarrow.parquet as pa_pq
+
+    sc_path = os.path.join(root, SIDECAR_DIR, f"{key}.parquet")
+    if not os.path.exists(sc_path):
+        return None
+    t = pa_pq.read_table(sc_path, columns=["file", "bloom", "primitive"]).to_pydict()
+    if not {os.path.normpath(f["path"]) for f in manifest["files"]} <= set(t["file"]):
+        return None
+    B = spark._jvm.org.apache.parquet.column.values.bloomfilter.BlockSplitBloomFilter
+    by_file: dict[str, tuple] = {}
+    for fname, blob, primitive in zip(t["file"], t["bloom"], t["primitive"]):
+        by_file.setdefault(fname, (primitive, []))[1].append(B(blob))
+    return by_file
+
+
+def _kept(
+    spark: SparkSession, manifest: dict, root: str, key: str, values: list, files: list[str]
+) -> list[str]:
+    """The one membership loop: those of `files` (manifest-relative
+    paths) whose blooms may hold any probe value. A file that cannot
+    be vetoed — no bloom, another primitive, an unencodable key type
+    or probe value — is kept."""
+    fields = manifest.get("schema", {}).get("fields", [])
+    spark_type = next((f["type"] for f in fields if f["name"] == key), None)
+    spec = _PLAIN.get(spark_type) if isinstance(spark_type, str) else None
+    if spec is None or (hashes := _probe_hashes(spark, spec[1], spec[2], values)) is None:
+        return list(files)
+    sidecar = _sidecar_blooms(spark, root, manifest, key)
+    read = _footer_blooms(spark, key) if sidecar is None else None
+    keep = []
+    for rel in files:
+        got = sidecar[os.path.normpath(rel)] if read is None else read(os.path.join(root, rel))
+        if (
+            got is None
+            or got[0] != spec[0]
+            or any(bloom.findHash(h) for bloom in got[1] for h in hashes)
+        ):
+            keep.append(rel)
+    return keep
 
 
 def build_bloom_sidecar(spark: SparkSession, path: str, column: str) -> int:
@@ -119,8 +176,10 @@ def build_bloom_sidecar(spark: SparkSession, path: str, column: str) -> int:
     (dwio/nimble/index/BloomFilter.h: blooms live in the index
     stripes, not the data). Probes then read a single small file
     instead of opening every data footer: at 10⁶ files that is the
-    difference between one read and a million. Returns the number of
-    blooms captured. Size the bitsets with
+    difference between one read and a million. A file that cannot
+    veto (a row group without a bloom) is left out, so the sidecar
+    does not cover the table and probes fall back to the footers.
+    Returns the number of blooms captured. Size the bitsets with
     ``WriteOptions.bloom_expected_ndv`` — the parquet default is
     1 MB per bloom; a right-sized one is KBs."""
     import pyarrow as pa
@@ -128,90 +187,26 @@ def build_bloom_sidecar(spark: SparkSession, path: str, column: str) -> int:
 
     from nimble_spark.sources.table import read_manifest
 
-    jvm = spark._jvm
-    conf = spark._jsc.hadoopConfiguration()
-    m = read_manifest(path)
+    read = _footer_blooms(spark, column)
+    Bytes = spark._jvm.java.io.ByteArrayOutputStream
     files, rgs, blobs, prims = [], [], [], []
-    for f in m["files"]:
-        fpath = os.path.join(path, f["path"])
-        jpath = jvm.org.apache.hadoop.fs.Path(fpath)
-        infile = jvm.org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(jpath, conf)
-        reader = jvm.org.apache.parquet.hadoop.ParquetFileReader.open(infile)
-        try:
-            footer = reader.getFooter()
-            for bi in range(footer.getBlocks().size()):
-                block = footer.getBlocks().get(bi)
-                cols = block.getColumns()
-                kcol = None
-                for ci in range(cols.size()):
-                    if cols.get(ci).getPath().toDotString() == column:
-                        kcol = cols.get(ci)
-                        break
-                if kcol is None or kcol.getBloomFilterOffset() < 0:
-                    continue
-                bloom = reader.getBloomFilterDataReader(block).readBloomFilter(kcol)
-                if bloom is None:
-                    continue
-                baos = jvm.java.io.ByteArrayOutputStream()
-                bloom.writeTo(baos)
-                files.append(os.path.normpath(f["path"]))
-                rgs.append(bi)
-                blobs.append(bytes(baos.toByteArray()))
-                prims.append(kcol.getPrimitiveType().getPrimitiveTypeName().name())
-        finally:
-            reader.close()
+    for f in read_manifest(path)["files"]:
+        got = read(os.path.join(path, f["path"]))
+        if got is None:
+            continue
+        primitive, blooms = got
+        for rg, bloom in enumerate(blooms):
+            baos = Bytes()
+            bloom.writeTo(baos)
+            files.append(os.path.normpath(f["path"]))
+            rgs.append(rg)
+            blobs.append(bytes(baos.toByteArray()))
+            prims.append(primitive)
     out_dir = os.path.join(path, SIDECAR_DIR)
     os.makedirs(out_dir, exist_ok=True)
     table = pa.table({"file": files, "rg": rgs, "bloom": blobs, "primitive": prims})
     pa_pq.write_table(table, os.path.join(out_dir, f"{column}.parquet"), compression="zstd")
     return len(blobs)
-
-
-def _sidecar_probe(
-    spark: SparkSession, root: str, manifest: dict, key: str, values: list
-) -> list[str] | None:
-    """Probe from the sidecar (no data-file opens). Returns None when
-    the sidecar is absent or does not cover every manifest file (e.g.
-    after compaction rewrote files) — caller falls back to footers."""
-    import pyarrow.parquet as pa_pq
-
-    sc_path = os.path.join(root, SIDECAR_DIR, f"{key}.parquet")
-    if not os.path.exists(sc_path):
-        return None
-    t = pa_pq.read_table(sc_path)
-    by_file: dict[str, list[bytes]] = {}
-    for fname, blob in zip(t.column("file").to_pylist(), t.column("bloom").to_pylist()):
-        by_file.setdefault(fname, []).append(blob)
-    want = {os.path.normpath(f["path"]) for f in manifest["files"]}
-    if not want <= set(by_file):
-        return None
-    jvm = spark._jvm
-    gw = spark.sparkContext._gateway
-    # the column's parquet primitive type rides in the sidecar, so
-    # the probe hashes with the exact overload the writer used
-    prims = set(t.column("primitive").to_pylist())
-    if len(prims) != 1:
-        return None
-    primitive = prims.pop()
-    keep = []
-    B = jvm.org.apache.parquet.column.values.bloomfilter.BlockSplitBloomFilter
-    for f in manifest["files"]:
-        rel = os.path.normpath(f["path"])
-        maybe = False
-        for blob in by_file[rel]:
-            bloom = B(blob)
-            for v in values:
-                h = _hash_value(jvm, gw, bloom, primitive, v)
-                if h is None:
-                    return None
-                if bloom.findHash(h):
-                    maybe = True
-                    break
-            if maybe:
-                break
-        if maybe:
-            keep.append(os.path.join(root, f["path"]))
-    return keep
 
 
 def explain_pruning(
@@ -242,7 +237,7 @@ def explain_pruning(
         plo, phi = min(vlist), max(vlist)
     else:
         vlist, plo, phi = None, lo, hi
-    out = []
+    verdicts = {}
     for f in m["files"]:
         verdict = "kept"
         if key in range_keys or (f["min"].get(key) is not None):
@@ -251,12 +246,12 @@ def explain_pruning(
                 (phi is not None and fmin > phi) or (plo is not None and fmax < plo)
             ):
                 verdict = "range"
-        if verdict == "kept" and vlist is not None and key in bloom_keys:
-            probe = bloom_probe_file(spark, os.path.join(path, f["path"]), key, vlist)
-            if probe["has_bloom"] and not probe["maybe"]:
-                verdict = "bloom"
-        out.append({"file": f["path"], "kept": verdict == "kept", "pruned_by": verdict})
-    return out
+        verdicts[f["path"]] = verdict
+    if vlist is not None and key in bloom_keys:
+        candidates = [p for p, v in verdicts.items() if v == "kept"]
+        kept = set(_kept(spark, m, path, key, vlist, candidates))
+        verdicts.update({p: "bloom" for p in candidates if p not in kept})
+    return [{"file": p, "kept": v == "kept", "pruned_by": v} for p, v in verdicts.items()]
 
 
 def bloom_prune_files(
@@ -270,13 +265,5 @@ def bloom_prune_files(
     bloom_keys = manifest.get("indexes", {}).get("bloom", {}).get("keys", [])
     if key not in bloom_keys:
         return None
-    values = list(values)
-    via_sidecar = _sidecar_probe(spark, root, manifest, key, values)
-    if via_sidecar is not None:
-        return via_sidecar
-    keep = []
-    for f in manifest["files"]:
-        fpath = os.path.join(root, f["path"])
-        if bloom_probe_file(spark, fpath, key, values)["maybe"]:
-            keep.append(fpath)
-    return keep
+    files = [f["path"] for f in manifest["files"]]
+    return [os.path.join(root, p) for p in _kept(spark, manifest, root, key, list(values), files)]

@@ -3,6 +3,8 @@ VeloxWriterTest/E2EIndexTest strategy, SURVEY.md §5)."""
 
 from __future__ import annotations
 
+import datetime
+import decimal
 import shutil
 import tempfile
 
@@ -130,7 +132,7 @@ def test_bloom_index_prunes_files(spark, tmpdir):
     assert all(not v["kept"] and v["pruned_by"] == "bloom" for v in verdicts)
 
 
-def test_bloom_sidecar_probe(spark, tmpdir):
+def test_bloom_sidecar_probe(spark, tmpdir, monkeypatch):
     """Sidecar bloom index: bitsets extracted once into one parquet
     under _nimble/index/bloom; probes then read the sidecar only and
     must return the same pruning verdicts as footer probing. The
@@ -138,12 +140,7 @@ def test_bloom_sidecar_probe(spark, tmpdir):
     each)."""
     import os
 
-    from nimble_spark.sources.bloom import (
-        SIDECAR_DIR,
-        _sidecar_probe,
-        bloom_prune_files,
-        build_bloom_sidecar,
-    )
+    from nimble_spark.sources import bloom
 
     src = spark.read.parquet(f"{SF_SMALL}/orders.parquet").repartition(6, "o_custkey")
     path = f"{tmpdir}/orders_bloom_sc"
@@ -153,21 +150,101 @@ def test_bloom_sidecar_probe(spark, tmpdir):
         WriteOptions(bloom_cols=["o_orderkey"], bloom_expected_ndv={"o_orderkey": 2000}),
     )
     # footer-probe verdicts BEFORE the sidecar exists
-    foot_absent = bloom_prune_files(spark, m, path, "o_orderkey", [99999999])
-    foot_present = bloom_prune_files(spark, m, path, "o_orderkey", [7])
+    foot_absent = bloom.bloom_prune_files(spark, m, path, "o_orderkey", [99999999])
+    foot_present = bloom.bloom_prune_files(spark, m, path, "o_orderkey", [7])
+    assert foot_absent == [] and 1 <= len(foot_present) < len(m["files"])
 
-    n = build_bloom_sidecar(spark, path, "o_orderkey")
+    n = bloom.build_bloom_sidecar(spark, path, "o_orderkey")
     assert n >= len(m["files"])
-    sc_file = os.path.join(path, SIDECAR_DIR, "o_orderkey.parquet")
+    sc_file = os.path.join(path, bloom.SIDECAR_DIR, "o_orderkey.parquet")
     # right-sized: far below the 1 MB-per-bloom default
     assert os.path.getsize(sc_file) < 256 * 1024
 
-    sc_absent = _sidecar_probe(spark, path, m, "o_orderkey", [99999999])
-    sc_present = _sidecar_probe(spark, path, m, "o_orderkey", [7])
-    assert sc_absent == foot_absent == []
-    assert sc_present == foot_present
-    # and the public entry now routes through the sidecar
-    assert bloom_prune_files(spark, m, path, "o_orderkey", [7]) == sc_present
+    # the sidecar serves the probe: no data footer is opened
+    def no_footers(*_a, **_k):
+        raise AssertionError("footer read while the sidecar covers the table")
+
+    monkeypatch.setattr(bloom, "_footer_blooms", no_footers)
+    assert bloom.bloom_prune_files(spark, m, path, "o_orderkey", [99999999]) == foot_absent
+    assert bloom.bloom_prune_files(spark, m, path, "o_orderkey", [7]) == foot_present
+
+
+def test_bloom_probe_py4j_cost(spark, tmpdir):
+    """Each probe value is hashed once per call, not once per (file,
+    row group): every extra absent value may cost one hash call plus
+    one findHash per bloom, and nothing more per file."""
+    import os
+    import threading
+
+    import pyarrow.parquet as pq
+
+    from nimble_spark.sources.bloom import bloom_prune_files
+
+    src = spark.read.parquet(f"{SF_SMALL}/orders.parquet").repartition(6, "o_custkey")
+    path = f"{tmpdir}/orders_bloom_cost"
+    m = write_table(src, path, WriteOptions(bloom_cols=["o_orderkey"]))
+    n_blooms = sum(
+        pq.ParquetFile(os.path.join(path, f["path"])).num_row_groups for f in m["files"]
+    )
+    client = spark.sparkContext._gateway._gateway_client
+    send = client.send_command
+    me = threading.get_ident()
+    calls = [0]
+
+    def counting(*a, **k):
+        # this thread's calls only: py4j sends object releases from its
+        # finalizer thread, whose backlog would land in whichever probe
+        # happens to run while it drains
+        calls[0] += threading.get_ident() == me
+        return send(*a, **k)
+
+    def cost(values):
+        calls[0] = 0
+        client.send_command = counting
+        try:
+            assert bloom_prune_files(spark, m, path, "o_orderkey", values) == []
+        finally:
+            client.send_command = send
+        return calls[0]
+
+    one = cost([99999999])
+    eight = cost([99999999 + i for i in range(8)])
+    assert eight - one <= 7 * (n_blooms + 1) + 10, (one, eight, n_blooms)
+
+
+@pytest.mark.parametrize(
+    "expr, probe, absent",
+    [
+        ("id", lambda i: i, 10**12),
+        ("CAST(id AS STRING)", str, "no-such-key"),
+        ("CAST(id AS DOUBLE)", float, 0.5),
+        ("CAST(id AS FLOAT)", float, 0.5),
+        ("date_add(DATE'1970-01-01', CAST(id AS INT))",
+         lambda i: datetime.date(1970, 1, 1) + datetime.timedelta(days=i), None),
+        ("CAST(id AS DECIMAL(15,2))", decimal.Decimal, None),
+        ("CAST(CAST(id AS STRING) AS BINARY)", lambda i: str(i).encode(), None),
+    ],
+    ids=["int", "string", "double", "float", "date", "decimal", "binary"],
+)
+def test_bloom_point_lookup_key_types(spark, tmpdir, expr, probe, absent):
+    """Every bloom key type answers a point lookup exactly as a plain
+    filter over the same files does. A key type the probe cannot
+    encode (decimal) keeps the file rather than dropping its rows; an
+    absent probe on an encodable type still prunes every file."""
+    import os
+
+    from nimble_spark.sources.bloom import bloom_prune_files
+
+    src = spark.range(4000).selectExpr("id", f"{expr} AS k").repartition(4)
+    path = f"{tmpdir}/bloom_key_{abs(hash(expr))}"
+    m = write_table(src, path, WriteOptions(bloom_cols=["k"]))
+    files = [os.path.join(path, f["path"]) for f in m["files"]]
+    v = probe(1234)
+    got = read_table(spark, path, point_lookup=("k", [v])).count()
+    want = spark.read.parquet(*files).filter(F.col("k") == F.lit(v)).count()
+    assert got == want == 1
+    if absent is not None:
+        assert bloom_prune_files(spark, m, path, "k", [absent]) == []
 
 
 def test_bloom_index_string_column(spark, tmpdir):
