@@ -33,7 +33,7 @@ How foreign entries compose with the rest of the engine:
   LOCALIZES whatever it touches.
 - ``deepen_clone`` localizes everything at once: each foreign file is
   copied under the clone's root and spliced in place via the shared
-  partial-rewrite publish (a data_change=false commit — CDC consumers
+  rewrite publisher (a data_change=false commit — CDC consumers
   never re-see rows because bytes moved). After it, the clone has no
   dependency on the source.
 - Vacuum only walks the clone's own directory — it can never reclaim
@@ -187,23 +187,20 @@ def deepen_clone(spark: SparkSession, path: str) -> dict:
     """Localize every foreign entry of a shallow clone: copy the bytes
     under the clone's root and splice each entry in place (order,
     stats and index bounds carry verbatim — the bytes are identical).
-    Publishes ONE ``mode="deepen"`` data_change=false commit via the
-    shared partial-rewrite path: snapshot replays apply it, CDC and
+    Publishes ONE ``mode="deepen"`` data_change=false commit through
+    the publisher every copy-on-write rewrite shares
+    (table._publish_rewrite): snapshot replays apply it, CDC and
     streaming consumers skip it (no row changed). After this commit
     the clone has no dependency on the source table; rolling back past
     it re-attaches to the source files (they ARE the pre-deepen
     snapshot, readable for as long as the source keeps them)."""
-    import pyspark.sql.types as T
-
-    from nimble_spark.sources.compaction import _publish_partial_rewrite
-    from nimble_spark.sources.table import _stat_cols
+    from nimble_spark.sources.table import _publish_rewrite
 
     with table_write_lock(path):
         m = read_manifest(path)
         foreign = [f for f in m["files"] if os.path.isabs(f["path"])]
         if not foreign:
             return m
-        stat_cols = _stat_cols(T.StructType.fromJson(m["schema"]))
         entries_at: dict[str, list[dict]] = {}
         staged: list[str] = []
         try:
@@ -226,12 +223,12 @@ def deepen_clone(spark: SparkSession, path: str) -> dict:
                     # published, so a leftover is unreferenced debris
                     # vacuum's age-gated sweep reclaims
             raise
-        return _publish_partial_rewrite(
+        return _publish_rewrite(
             path,
             m,
-            [[e] for e in foreign],
+            [e["path"] for e in foreign],
             entries_at,
-            mode="deepen",
+            "deepen",
+            data_change=False,
             user_md={"clone.deepened_files": str(len(foreign))},
-            stat_cols=stat_cols,
         )

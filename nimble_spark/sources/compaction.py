@@ -31,8 +31,6 @@ inputs stream straight to the new file.
 from __future__ import annotations
 
 import os
-import shutil
-import uuid
 
 from pyspark.sql import SparkSession
 
@@ -133,8 +131,10 @@ def vacuum_table(path: str, min_age_s: float | None = None) -> list[str]:
     truth (the tablet footer analogue): a plain directory listing
     would happily read half-written or superseded files, so vacuuming
     keeps directory state and manifest state equal. Returns the
-    root-relative paths removed. Metadata (the manifest dir) and
-    non-parquet markers are never touched.
+    root-relative paths removed. Non-parquet markers and the manifest
+    dir are never touched, except its retention trash and the staging
+    dirs of rewrites that died before their publish
+    (``_nimble/staging/*``, age-gated like staged files).
 
     ``min_age_s`` is the in-flight-write grace period (the Delta
     VACUUM retention analogue): a concurrent DataSource write's
@@ -151,7 +151,6 @@ def vacuum_table(path: str, min_age_s: float | None = None) -> list[str]:
     maintenance jobs call vacuum with no arguments and each table
     carries its own retention policy."""
     import re
-    import shutil
     import time as _time
 
     from nimble_spark.sources.table import repair_interrupted_swap, table_properties
@@ -261,6 +260,20 @@ def vacuum_table(path: str, min_age_s: float | None = None) -> list[str]:
                         )
                 except OSError:
                     continue  # vanished or unstat-able: not ours to force
+    # Staging dirs of copy-on-write rewrites that died before their
+    # move-in finished (table._stage_rewrite): invisible to every read,
+    # reclaimed age-gated like any other staged debris.
+    from nimble_spark.sources.table import STAGING_DIR
+
+    sroot = os.path.join(path, MANIFEST_DIR, STAGING_DIR)
+    for d in fs.list_dir(sroot) if fs.exists(sroot) else []:
+        try:
+            if now - fs.mtime(os.path.join(sroot, d)) < min_age_s:
+                continue
+        except OSError:
+            continue  # vanished (its own cleanup) — skip
+        fs.delete_tree(os.path.join(sroot, d))
+        removed.append(os.path.join(MANIFEST_DIR, STAGING_DIR, d))
     return sorted(removed)
 
 
@@ -329,13 +342,14 @@ def compact_table(
     target_file_bytes: int = 128 * 1024 * 1024,
 ) -> dict:
     """Merge small adjacent files into ~target-size files and publish
-    the rebuilt manifest ATOMICALLY BEFORE deleting any source file —
-    the same publish-first crash discipline as the copy-on-write
-    rewrites (merge.py): readers are manifest-true, so the staged
-    merged files are invisible until the publish, the old files stay
-    readable until it, and a crash anywhere leaves either the old or
-    the new table fully intact (stranded files are unreferenced debris
-    for vacuum's age-gated sweep).
+    the rebuilt manifest ATOMICALLY BEFORE moving any source file to
+    the trash — through the stager and publisher every copy-on-write
+    rewrite shares (table._stage_rewrite, table._publish_rewrite):
+    readers are manifest-true, so the staged merged files are
+    invisible until the publish, the old files stay readable until
+    it, and a crash anywhere leaves either the old or the new table
+    fully intact (stranded files are unreferenced debris for vacuum's
+    age-gated sweep). The commit is ``data_change=False``.
 
     Returns ``{"bins": n, "files_before": ..., "files_after": ...,
     "rows": ...}``. Hash-bucketed / Hive-partitioned tables compact
@@ -345,80 +359,48 @@ def compact_table(
     Merged files are read from the raw leaves with no partition
     discovery, so they carry exactly the physical (non-partition)
     columns every other leaf in the directory carries."""
-    import pyspark.sql.types as T
-
-    from nimble_spark.sources.table import (
-        _describe_parquet_file,
-        _fold_column_stats,
-        _layout_stats,
-        _stat_cols,
-        _write_manifest,
-    )
+    from nimble_spark.sources.table import _publish_rewrite, _stage_rewrite
 
     m = read_manifest(path)
-    idx = m.get("indexes", {})
     files_before = len(m["files"])
     bins = plan_compaction(m, target_file_bytes)
     if not bins:
         return {"bins": 0, "files_before": files_before, "files_after": files_before, "rows": m["rows"]}
 
-    schema = T.StructType.fromJson(m["schema"])
-    stat_cols = _stat_cols(schema)
-    cluster_keys = (idx.get("cluster") or {}).get("keys", [])
-    # Stage every bin's merged output into the table dir under a fresh
-    # name, describe it, and remember which ORIGINAL position it takes
-    # — the new manifest splices each merged entry where its bin's
-    # first member sat, so cluster range order and row_range positions
-    # survive (manifest order is the authority; see _build_manifest).
-    merged_entry_at: dict[str, dict] = {}
+    cluster_keys = (m.get("indexes", {}).get("cluster") or {}).get("keys", [])
+    # Each bin's merged output lands in the bin's own directory (on a
+    # partitioned/bucketed table that directory IS the index, and
+    # plan_compaction guarantees a bin never crosses one) and splices
+    # in where the bin's first member sat, so cluster range order and
+    # row_range positions survive (manifest order is the authority).
+    merged_at: dict[str, list[dict]] = {}
     for b in bins:
-        srcs = [os.path.join(path, f["path"]) for f in b]
-        tmp = os.path.join(path, MANIFEST_DIR, f"compact-tmp-{uuid.uuid4().hex}")
+        first = os.path.normpath(b[0]["path"])
         # One partition per bin. Spark schedules multi-file reads by
         # size, not name, so concatenation order is arbitrary — on a
         # clustered table re-sort the bin by the cluster keys to keep
         # the table's semantic (range) row order; plain tables have
         # no defined row order to preserve.
-        merged = spark.read.schema(_declared_read_schema(m)).parquet(*srcs).coalesce(1)
+        merged = spark.read.schema(_declared_read_schema(m)).parquet(
+            *[os.path.join(path, f["path"]) for f in b]
+        ).coalesce(1)
         if cluster_keys:
             merged = merged.sortWithinPartitions(*cluster_keys)
-        writer = merged.write.mode("overwrite").option("compression", "zstd")
-        # merged files keep the table's bloom index (a plain rewrite
-        # would drop the filters — still correct, never selective)
-        for c in (idx.get("bloom") or {}).get("keys", []):
-            writer = writer.option(f"parquet.bloom.filter.enabled#{c}", "true")
-        writer.parquet(tmp)
-        part = [p for p in os.listdir(tmp) if p.endswith(".parquet")]
-        assert len(part) == 1, f"expected one output file per bin, got {part}"
-        # the merged file lives in its bin's directory — on a
-        # partitioned/bucketed table that directory IS the index, and
-        # plan_compaction guarantees the bin never crossed one
-        bin_dir = os.path.dirname(os.path.normpath(b[0]["path"]))
-        if os.path.isabs(bin_dir):
-            # Foreign (shallow-clone) group: its members live under the
-            # SOURCE table's root — the merged output must land under
-            # THIS table's root, never the source's (clones refuse
-            # partitioned/bucketed layouts, so no directory shape to
-            # reproduce).
-            bin_dir = ""
-        out_name = os.path.join(bin_dir, f"compact-{uuid.uuid4().hex[:12]}.parquet")
-        shutil.move(os.path.join(tmp, part[0]), os.path.join(path, out_name))
-        shutil.rmtree(tmp, ignore_errors=True)
-        merged_entry_at[os.path.normpath(b[0]["path"])] = _describe_parquet_file(
-            os.path.join(path, out_name), path, stat_cols
+        merged_at[first] = _stage_rewrite(
+            spark, path, m, merged, "compact", into=os.path.dirname(first)
         )
 
-    new_m = _publish_partial_rewrite(
+    new_m = _publish_rewrite(
         path,
         m,
-        bins,
-        {k: [v] for k, v in merged_entry_at.items()},
-        mode="compact",
+        [f["path"] for b in bins for f in b],
+        merged_at,
+        "compact",
+        data_change=False,
         user_md={
             "compaction.files_before": str(files_before),
             "compaction.bins": str(len(bins)),
         },
-        stat_cols=stat_cols,
     )
     return {
         "bins": len(bins),
@@ -426,192 +408,6 @@ def compact_table(
         "files_after": len(new_m["files"]),
         "rows": new_m["rows"],
     }
-
-
-def _publish_partial_rewrite(
-    path: str,
-    m: dict,
-    groups: list[list[dict]],
-    entries_at: dict[str, list[dict]],
-    mode: str,
-    user_md: dict,
-    stat_cols,
-) -> dict:
-    """Shared publish step for PARTIAL physical rewrites (compaction,
-    incremental recluster): splice the new entries into the manifest,
-    publish atomically BEFORE deleting any source file, then tombstone
-    the replaced files into the retention trash.
-
-    ``groups`` are the replaced manifest entries; ``entries_at`` maps
-    each group's first-member relpath to its ordered replacement
-    entries (splicing at the first member keeps manifest order — the
-    cluster range order authority — intact). Untouched entries keep
-    their positions: verbatim when their stats are complete,
-    re-described from the footer when a legacy entry lacks them (same
-    completeness rule as the incremental build's reuse filter).
-
-    The commit log, CHECK constraints, and column attributes carry
-    forward: this is a physical rewrite, not a new table. Streaming
-    offsets (commit indices) stay valid — replays of windows whose
-    files were rewritten away fail LOUDLY via resolve_historical_file
-    until vacuum, like any rewrite — and appends keep validating the
-    table's constraints. The rewrite logs a data_change=False commit
-    (the Delta OPTIMIZE marker): snapshot replays APPLY it, CDC/stream
-    consumers SKIP it — re-emitting 100 TB of unchanged rows through
-    every downstream stream because the layout changed would be the
-    scale anti-pattern."""
-    from nimble_spark.sources.table import (
-        _describe_parquet_file,
-        _fold_column_stats,
-        _layout_stats,
-        _next_commit,
-        _write_manifest,
-    )
-
-    replaced = {os.path.normpath(f["path"]) for g in groups for f in g}
-    files_info: list[dict] = []
-    for f in m["files"]:
-        rel = os.path.normpath(f["path"])
-        if rel in entries_at:
-            files_info.extend(entries_at[rel])
-        elif rel not in replaced:
-            if "nulls" in f and "min" in f:
-                files_info.append(f)
-            else:  # legacy/partial entry: re-read its footer
-                files_info.append(
-                    _describe_parquet_file(os.path.join(path, rel), path, stat_cols)
-                )
-
-    prior_commits = list(m.get("commits", []))
-    n_added = sum(len(v) for v in entries_at.values())
-    new_m = {
-        "format_version": 1,
-        # carry the prior stats generation: untouched entries pass
-        # through verbatim, so a pre-fix table stays marked pre-fix
-        # (read guard active, next append repairs) and a healthy
-        # gen-2 table is not silently downgraded
-        "stats_gen": m.get("stats_gen", 1),
-        "schema": m["schema"],
-        "column_attributes": m.get("column_attributes", {}),
-        "rows": sum(f["rows"] for f in files_info),
-        "files": files_info,
-        "column_stats": _fold_column_stats(files_info),
-        "indexes": m.get("indexes", {}),
-        "user_metadata": {**m.get("user_metadata", {}), **user_md},
-        "write_stats": dict(m.get("write_stats", {}), **_layout_stats(files_info)),
-        "commits": prior_commits
-        + [
-            {
-                "commit": _next_commit(prior_commits),
-                "mode": mode,
-                "data_change": False,
-                "files_added": n_added,
-                "files_removed": len(replaced),
-                "removed": sorted(replaced),
-                "rows_added": 0,
-                "files": sorted(
-                    e["path"] for v in entries_at.values() for e in v
-                ),
-            }
-        ],
-    }
-    if m.get("constraints"):
-        new_m["constraints"] = m["constraints"]
-    # dedup_columns contract survives a physical rewrite: rewritten
-    # files are read from (and written with) the stored schema, so the
-    # alias map and logical order stay exactly as recorded.
-    for k in ("column_aliases", "logical_columns", "tags", "schema_mapping",
-              "properties"):
-        if m.get(k):
-            new_m[k] = m[k]
-    from nimble_spark.sources.deletes import carry_consumed_masks
-
-    _cm = carry_consumed_masks(path, m)
-    if _cm:  # dead-mask fence survives until its dirs are reclaimed
-        new_m["consumed_masks"] = _cm
-    # NDV/SUM/HIST synopses stay complete across maintenance: untouched
-    # entries carry theirs verbatim; freshly merged/reclustered files
-    # compute theirs here (bounded: only the rewritten files, only the
-    # declared columns)
-    if m.get("ndv_columns") or m.get("sum_columns") or m.get("histogram_columns"):
-        from nimble_spark.sources.table import _synopses_of_file
-
-        nc, sc = m.get("ndv_columns"), m.get("sum_columns")
-        hc = m.get("histogram_columns")
-        if nc:
-            new_m["ndv_columns"] = nc
-        if sc:
-            new_m["sum_columns"] = sc
-        if hc:
-            new_m["histogram_columns"] = hc
-
-        def _refresh(e: dict) -> dict:
-            if os.path.isabs(e["path"]):
-                return e
-            need_ndv = nc and "ndv" not in e
-            need_sum = sc and "sums" not in e
-            need_hist = hc and "hist" not in e
-            if not (need_ndv or need_sum or need_hist):
-                return e
-            ndv, sums, hist = _synopses_of_file(
-                os.path.join(path, e["path"]),
-                nc if need_ndv else None,
-                sc if need_sum else None,
-                hc if need_hist else None,
-            )
-            # copy-on-write per entry: carried entries are SHARED with
-            # the manifest cache — never mutate them in place
-            e = dict(e)
-            if need_ndv:
-                e["ndv"] = ndv
-            if need_sum:
-                e["sums"] = sums
-            if need_hist:
-                e["hist"] = hist
-            return e
-
-        new_m["files"] = [_refresh(e) for e in new_m["files"]]
-    # ATOMIC commit point; base = the log this compaction derived from
-    # (a concurrent streaming micro-batch merges in, never erased)
-    _write_manifest(path, new_m, base_commits=prior_commits)
-
-    # Only after the publish: tombstone the replaced sources into the
-    # retention trash (same discipline as merge.py — snapshots and CDC
-    # replays spanning the rewrite stay readable until VACUUM). A
-    # crash mid-loop strands some at their original paths, where
-    # historical reads still resolve them; the live manifest never
-    # references them again either way.
-    fs = get_fs()
-    # named by the rewrite's COMMIT NUMBER (post-expiry the log
-    # position diverges and could reuse a pre-expiry dir name)
-    trash = os.path.join(
-        path, MANIFEST_DIR, "trash", f"commit-{_next_commit(prior_commits)}"
-    )
-    fs.makedirs(trash)
-    for g in groups:
-        for f in g:
-            if os.path.isabs(f["path"]):
-                # Shallow-clone foreign entry: the SOURCE table owns
-                # the bytes — never move them. The manifest removal is
-                # the whole replacement (the rewrite just localized
-                # the rows); historical reads resolve the absolute
-                # path directly, and the clone's dependency on it ends
-                # at vacuum of the SOURCE, not of this table.
-                continue
-            src = os.path.join(path, f["path"])
-            # rel-path-preserving, like merge/rollback:
-            # resolve_historical_file globs trash/commit-*/<rel>, so
-            # partitioned/bucketed rels must keep their subdirs
-            dst = os.path.join(trash, os.path.normpath(f["path"]))
-            fs.makedirs(os.path.dirname(dst))
-            try:
-                fs.move(src, dst)
-            except OSError:
-                pass  # already gone — harmless
-            crc = os.path.join(os.path.dirname(src), f".{os.path.basename(src)}.crc")
-            if os.path.exists(crc):
-                os.remove(crc)
-    return new_m
 
 
 def fast_ndv(path: str, col: str) -> dict:
@@ -1291,8 +1087,11 @@ def _recluster_partial(
 ) -> dict:
     """Incremental recluster body (called under the table write lock):
     group files into overlap components on the first cluster key from
-    manifest bounds, re-range each component in isolation, publish via
-    the shared partial-rewrite path. Components are computed per leaf
+    manifest bounds, re-range each component in isolation, stage each
+    component's files in its leaf directory (table._stage_rewrite) and
+    publish them all in one ``data_change=False`` commit
+    (table._publish_rewrite), each component's files spliced in key
+    order where its first member sat. Components are computed per leaf
     directory — partition/bucket dirs ARE the index, a rewrite never
     crosses one (same invariant as plan_compaction).
 
@@ -1305,9 +1104,7 @@ def _recluster_partial(
     components."""
     import math
 
-    import pyspark.sql.types as T
-
-    from nimble_spark.sources.table import _describe_parquet_file, _stat_cols
+    from nimble_spark.sources.table import _publish_rewrite, _stage_rewrite
 
     idx = m.get("indexes", {})
     if "cluster" not in idx:
@@ -1318,7 +1115,6 @@ def _recluster_partial(
         )
     keys = idx["cluster"]["keys"]
     key = keys[0]
-    stat_cols = _stat_cols(T.StructType.fromJson(m["schema"]))
     groups = plan_recluster(m, key=key)
     files_before = len(m["files"])
     if not groups:
@@ -1332,8 +1128,9 @@ def _recluster_partial(
 
     entries_at: dict[str, list[dict]] = {}
     for g in groups:
-        srcs = [os.path.join(path, f["path"]) for f in g]
-        df = spark.read.schema(_declared_read_schema(m)).parquet(*srcs)
+        df = spark.read.schema(_declared_read_schema(m)).parquet(
+            *[os.path.join(path, f["path"]) for f in g]
+        )
         missing = [k for k in keys if k not in df.columns]
         if missing:
             raise ValueError(
@@ -1342,44 +1139,28 @@ def _recluster_partial(
             )
         n_out = max(1, math.ceil(sum(f["bytes"] for f in g) / target_file_bytes))
         out = df.repartitionByRange(n_out, *keys).sortWithinPartitions(*keys)
-        tmp = os.path.join(path, MANIFEST_DIR, f"recluster-tmp-{uuid.uuid4().hex}")
-        writer = out.write.mode("overwrite").option("compression", "zstd")
-        for c in (idx.get("bloom") or {}).get("keys", []):
-            writer = writer.option(f"parquet.bloom.filter.enabled#{c}", "true")
-        writer.parquet(tmp)
-        bin_dir = os.path.dirname(os.path.normpath(g[0]["path"]))
-        if os.path.isabs(bin_dir):
-            bin_dir = ""  # foreign (shallow-clone) group: land locally
-        new_entries: list[dict] = []
-        for p in sorted(os.listdir(tmp)):
-            if not p.endswith(".parquet"):
-                continue
-            out_name = os.path.join(bin_dir, f"recluster-{uuid.uuid4().hex[:12]}.parquet")
-            shutil.move(os.path.join(tmp, p), os.path.join(path, out_name))
-            e = _describe_parquet_file(os.path.join(path, out_name), path, stat_cols)
-            if e["rows"] == 0:  # empty range partition — drop, don't publish
-                os.remove(os.path.join(path, out_name))
-                continue
-            new_entries.append(e)
-        shutil.rmtree(tmp, ignore_errors=True)
+        first = os.path.normpath(g[0]["path"])
+        new_entries = _stage_rewrite(
+            spark, path, m, out, "recluster", into=os.path.dirname(first)
+        )
         # splice in key order so manifest order stays the range order
         new_entries.sort(
             key=lambda e: ((e["min"] or {}).get(key) is None, (e["min"] or {}).get(key))
         )
-        entries_at[os.path.normpath(g[0]["path"])] = new_entries
+        entries_at[first] = new_entries
 
     n_rewritten = sum(len(g) for g in groups)
-    new_m = _publish_partial_rewrite(
+    new_m = _publish_rewrite(
         path,
         m,
-        groups,
+        [f["path"] for g in groups for f in g],
         entries_at,
-        mode="recluster",
+        "recluster",
+        data_change=False,
         user_md={
             "recluster.partial_groups": str(len(groups)),
             "recluster.files_rewritten": str(n_rewritten),
         },
-        stat_cols=stat_cols,
     )
     return {
         "groups": len(groups),

@@ -19,23 +19,17 @@ travel and CDC replays across the rewrite stay readable)."""
 from __future__ import annotations
 
 import os
-import shutil
-import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from nimble_spark.sources.fs import get_fs
 from nimble_spark.sources.table import (
     BUCKET_COL,
-    MANIFEST_DIR,
-    STATS_GEN,
     WriteOptions,
-    _build_manifest,
-    _next_commit,
     _plan_parquet,
-    _write_manifest,
+    _publish_rewrite,
     _restore_aliases,
+    _stage_rewrite,
     read_manifest,
     read_table,
 )
@@ -148,24 +142,6 @@ def _guard_pending_masks(
             )
 
 
-def _layout_rewrite(manifest: dict, new_rows: DataFrame):
-    """Directory-shaped layouts a copy-on-write rewrite must
-    reproduce: Hive partitions write rows under their partition
-    directories, hash buckets recompute the bucket column with the
-    writer's exact formula (table.py write_table) so every rewritten
-    row lands in the directory its point lookups prune to. Returns
-    (rows-with-layout-columns, [layout partition columns])."""
-    pidx = manifest.get("indexes", {})
-    layout_cols = list((pidx.get("partition") or {}).get("keys") or [])
-    h = pidx.get("hash")
-    if h:
-        new_rows = new_rows.withColumn(
-            BUCKET_COL, F.pmod(F.xxhash64(F.col(h["key"])), F.lit(h["n_buckets"]))
-        )
-        layout_cols.append(BUCKET_COL)
-    return new_rows, layout_cols
-
-
 def merge_into(
     spark: SparkSession,
     path: str,
@@ -185,11 +161,15 @@ def merge_into(
        never collected; only the distinct FILE list (metadata,
        bounded by file count) reaches the driver.
     2. Rewrite = (affected-file rows anti-join source keys) ∪ source.
-       Unaffected files are untouched bytes; the incremental manifest
-       build reuses their entries verbatim (no re-hash).
-    3. Commit: new files staged then moved in, replaced files
-       deleted, manifest rebuilt with a ``mode="merge"`` commit-log
-       entry. A reader holding the old manifest still resolves the
+       Unaffected files are untouched bytes and keep their manifest
+       entries verbatim (no re-hash).
+    3. Commit (table._stage_rewrite, table._publish_rewrite — the
+       path every copy-on-write rewrite shares): the new files stage
+       under ``_nimble/staging`` with the table's writer options and
+       move in under fresh names; only they are described; the
+       manifest publishes with a ``mode="merge"`` commit-log entry,
+       and only then do the replaced files move to the retention
+       trash. A reader holding the old manifest still resolves the
        old files until the atomic manifest rename lands.
 
     Directory-shaped layouts: Hive partitions and hash buckets are
@@ -203,8 +183,9 @@ def merge_into(
     only the buckets those keys hash to. ``cut`` files (whole groups
     per file) still raise: a partial rewrite cannot re-cut without
     re-shuffling the whole table. Stats-shaped indexes (cluster
-    ranges, blooms, sorted fence) carry forward — per-file min/max
-    stays correct on mixed layouts.
+    ranges, sorted fence) carry forward — per-file min/max stays
+    correct on mixed layouts — and the new files carry the table's
+    bloom filters.
     """
     manifest = read_manifest(path)
     _reject_aliased(manifest)
@@ -312,7 +293,11 @@ def merge_into(
     else:
         new_rows = source.select(*cols)
 
-    return _commit_rewrite(spark, path, manifest, tgt.schema, affected, new_rows, "merge", opts)
+    staged = _stage_rewrite(
+        spark, path, manifest, _to_physical(new_rows, manifest), "merge",
+        compression=(opts or WriteOptions()).compression,
+    )
+    return _publish_rewrite(path, manifest, affected, {None: staged}, "merge")
 
 
 def _bucket_of(rel: str) -> int | None:
@@ -354,168 +339,6 @@ def _affected_files(
         real = os.path.realpath(p)
         out.append(entry_of.get(real, os.path.relpath(real, root)))
     return out
-
-
-def _commit_rewrite(
-    spark: SparkSession,
-    path: str,
-    manifest: dict,
-    schema,
-    affected: list[str],
-    new_rows: DataFrame,
-    mode: str,
-    opts: WriteOptions | None,
-) -> dict:
-    """Copy-on-write commit: stage ``new_rows``, move the staged files
-    in, drop the replaced ``affected`` files, rebuild the manifest
-    incrementally (untouched entries reused verbatim) and append a
-    ``mode`` commit-log entry recording additions and removals.
-
-    Directory-shaped layouts are reproduced: the staged write uses
-    the table's own partitionBy columns (Hive partition keys and/or
-    the recomputed hash-bucket column), and each staged leaf moves in
-    UNDER its partition directory, so directory pruning stays exact
-    across the rewrite."""
-    import pyspark.sql.types as T
-
-    pidx = manifest.get("indexes", {})
-    if manifest.get("schema_mapping"):
-        # rewritten rows arrive under LOGICAL names; files store
-        # PHYSICAL names, and the manifest schema (the stats/describe
-        # authority) is physical too
-        new_rows = _to_physical(new_rows, manifest)
-        schema = T.StructType.fromJson(manifest["schema"])
-    new_rows, layout_cols = _layout_rewrite(manifest, new_rows)
-    staging = f"{path}-{mode}-{uuid.uuid4().hex[:8]}"
-    writer = new_rows.write.mode("overwrite").option(
-        "compression", (opts or WriteOptions()).compression
-    )
-    if layout_cols:
-        writer = writer.partitionBy(*layout_cols)
-    writer.parquet(staging)
-    moved: list[str] = []
-    for root, _dirs, fs in os.walk(staging):
-        rel_dir = os.path.relpath(root, staging)
-        for f in sorted(fs):
-            if not f.endswith(".parquet"):
-                continue
-            name = f"{mode}-{uuid.uuid4().hex[:8]}-{f}"
-            if rel_dir == ".":
-                dst_rel = name
-            else:
-                dst_rel = os.path.join(rel_dir, name)
-                os.makedirs(os.path.join(path, rel_dir), exist_ok=True)
-            os.rename(os.path.join(root, f), os.path.join(path, dst_rel))
-            moved.append(os.path.normpath(dst_rel))
-    shutil.rmtree(staging, ignore_errors=True)
-    reuse = {
-        os.path.normpath(e["path"]): e
-        for e in manifest["files"]
-        if "nulls" in e and os.path.normpath(e["path"]) not in set(affected)
-    }
-    if manifest.get("stats_gen", 1) < STATS_GEN:
-        # pre-fix entries may under-count nulls (table.STATS_GEN):
-        # re-describe instead of reusing — _build_manifest stamps the
-        # current gen, so carrying poisoned entries would mislabel
-        # the rewritten table as repaired
-        reuse = {}
-    index_meta = {
-        k: pidx[k]
-        for k in ("cluster", "zorder", "bloom", "sorted", "sorted_fence", "partition", "hash")
-        if k in pidx
-    }
-    prior_commits = list(manifest.get("commits", []))
-    prior_rows = sum(c.get("rows_added", 0) for c in prior_commits)
-    # Replaced files are still at their recorded paths here — the new
-    # manifest is built around them via ``exclude`` so it can be
-    # PUBLISHED FIRST. Order matters for crash safety: staged files
-    # are invisible to old-manifest readers, so publishing the new
-    # manifest while the replaced files still exist means neither the
-    # old nor the new manifest ever references a missing path. Only
-    # after the atomic publish do the replaced files move to trash
-    # (retained for snapshot/CDC reads until vacuum_table) — a crash
-    # in between leaves them as harmless unreferenced debris that
-    # snapshot reads still resolve at their original paths.
-    # Crash-retry fence (r8 fault-injection sweep): any parquet on
-    # disk that is neither in the prior manifest nor among THIS
-    # rewrite's moved-in files is debris of a rewrite that died
-    # between its move-in and its manifest publish — adopting it
-    # would resurrect the dead attempt's rows as duplicates when the
-    # caller retries. This op knows its exact output (``moved``), so
-    # the discriminator is precise. Debris stays for vacuum.
-    from nimble_spark.sources.table import _unreferenced_parquet_rels
-
-    prior_paths = {os.path.normpath(e["path"]) for e in manifest["files"]}
-    debris = _unreferenced_parquet_rels(path, prior_paths | set(moved))
-    new_manifest = _build_manifest(
-        spark,
-        schema,
-        path,
-        opts or WriteOptions(),
-        index_meta,
-        reuse=reuse,
-        exclude={os.path.normpath(f) for f in affected} | debris,
-        ndv_cols=manifest.get("ndv_columns"),
-        sum_cols=manifest.get("sum_columns"),
-        hist_cols=manifest.get("histogram_columns"),
-    )
-    # Table-level contracts survive a rewrite: CHECK constraints keep
-    # gating appends, and snapshot tags keep resolving (their commits
-    # stay replayable until vacuum reclaims the trash).
-    for k in ("constraints", "tags", "schema_mapping", "ndv_columns",
-              "sum_columns", "histogram_columns", "properties"):
-        if manifest.get(k):
-            new_manifest[k] = manifest[k]
-    from nimble_spark.sources.deletes import carry_consumed_masks
-
-    _cm = carry_consumed_masks(path, manifest)
-    if _cm:  # dead-mask fence survives until its dirs are reclaimed
-        new_manifest["consumed_masks"] = _cm
-    new_manifest["commits"] = prior_commits + [
-        {
-            "commit": _next_commit(prior_commits),
-            "mode": mode,
-            "files_added": len(moved),
-            "files_removed": len(affected),
-            "removed": sorted(affected),
-            "rows_added": new_manifest["rows"] - prior_rows,
-            "files": sorted(moved),
-        }
-    ]
-    os.makedirs(os.path.join(path, MANIFEST_DIR), exist_ok=True)
-    # base = the log this merge derived from: a streaming micro-batch
-    # CAS-landing mid-merge is folded in, not erased (ADVICE r10 #1)
-    _write_manifest(path, new_manifest, base_commits=prior_commits)
-    # Commit point passed — only now tombstone the replaced files into
-    # the retention trash (kept for read_table(as_of_commit=N) and CDC
-    # replays until vacuum_table reclaims them; directory-based
-    # current-state scans never see the `_nimble` metadata dir). A
-    # crash before this loop completes leaves the stragglers as
-    # unreferenced debris at their ORIGINAL paths, where snapshot
-    # reads still resolve them — the live manifest never references a
-    # trashed path.
-    fs = get_fs()
-    # named by the rewrite's COMMIT NUMBER (post-expiry the log
-    # position diverges and could reuse a pre-expiry dir name)
-    trash = os.path.join(
-        path, MANIFEST_DIR, "trash", f"commit-{_next_commit(prior_commits)}"
-    )
-    fs.makedirs(trash)
-    for f in affected:
-        if os.path.isabs(f):
-            # Shallow-clone foreign entry: the SOURCE table owns the
-            # bytes — never move them. Dropping the manifest entry is
-            # the whole replacement; historical reads resolve the
-            # absolute path directly.
-            continue
-        # preserve the RELATIVE path inside the trash dir —
-        # resolve_historical_file globs trash/commit-*/<rel>, so a
-        # partitioned/bucketed file (subdirs in rel) must keep its
-        # directory shape to stay replayable
-        dst = os.path.join(trash, f)
-        fs.makedirs(os.path.dirname(dst))
-        fs.move(os.path.join(path, f), dst)
-    return new_manifest
 
 
 def update_where(
@@ -563,7 +386,11 @@ def update_where(
     updated = aff_df.withColumns(
         {c: F.when(cond, F.expr(e)).otherwise(F.col(c)) for c, e in set_exprs.items()}
     )
-    return _commit_rewrite(spark, path, manifest, tgt.schema, affected, updated, "update", opts)
+    staged = _stage_rewrite(
+        spark, path, manifest, _to_physical(updated, manifest), "update",
+        compression=(opts or WriteOptions()).compression,
+    )
+    return _publish_rewrite(path, manifest, affected, {None: staged}, "update")
 
 
 def overwrite_partitions(
@@ -576,10 +403,9 @@ def overwrite_partitions(
     partition directories whose values appear in ``df``; every other
     partition keeps its bytes and its manifest entry verbatim. The
     idempotent-backfill primitive — re-running a day's pipeline
-    replaces that day, never touching the rest of the table. Uses
-    Spark's dynamic partitionOverwriteMode for the directory swap,
-    then rebuilds the manifest incrementally and logs a commit with
-    the added/removed files."""
+    replaces that day, never touching the rest of the table. The new
+    rows go through the copy-on-write path merge and update share,
+    which logs a commit with the added/removed files."""
     manifest = read_manifest(path)
     _reject_aliased(manifest)
     if manifest.get("schema_mapping"):
@@ -630,28 +456,21 @@ def overwrite_partitions(
         if tuple(_path_partition_values(e["path"]).get(k) for k in pkeys)
         in part_vals
     ]
-    # Stage-then-publish through the shared copy-on-write commit
-    # (_commit_rewrite): the new files stage in a sibling dir and move
-    # in under unique names, the manifest publishes FIRST (replaced
-    # files intact until the commit point), and the replaced files
-    # then retire to the retention trash — snapshot reads across the
-    # backfill keep resolving, and a crash at ANY boundary leaves the
-    # old or the new table, never a manifest referencing deleted
-    # bytes. (The previous implementation rode Spark's in-place
-    # dynamic partitionOverwriteMode, which deletes the replaced
-    # partition BEFORE the manifest publish — the r8 fault-injection
-    # sweep caught the torn window: PATH_NOT_FOUND on the live read.)
-    import pyspark.sql.types as T
-
-    return _commit_rewrite(
-        spark,
-        path,
-        manifest,
-        T.StructType.fromJson(manifest["schema"]),
-        affected,
-        df,
-        mode="overwrite_partitions",
-        opts=opts,
+    # Stage-then-publish like every copy-on-write rewrite: the new
+    # files stage under _nimble/staging and move in under unique names,
+    # the manifest publishes FIRST (replaced files intact until the
+    # commit point), and the replaced files then retire to the
+    # retention trash — snapshot reads across the backfill keep
+    # resolving, and a crash at ANY boundary leaves the old or the new
+    # table, never a manifest referencing deleted bytes. (Spark's
+    # in-place dynamic partitionOverwriteMode deletes the replaced
+    # partition BEFORE the manifest publish — a torn window.)
+    staged = _stage_rewrite(
+        spark, path, manifest, df, "overwrite_partitions",
+        compression=(opts or WriteOptions()).compression,
+    )
+    return _publish_rewrite(
+        path, manifest, affected, {None: staged}, "overwrite_partitions"
     )
 
 

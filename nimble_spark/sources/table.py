@@ -2895,6 +2895,232 @@ def _next_commit(commits: list[dict]) -> int:
     return int(commits[-1].get("commit", len(commits) - 1)) + 1
 
 
+# Copy-on-write rewrites (merge_into, update_where, overwrite_partitions,
+# compact_table, incremental recluster, deepen_clone) replace whole
+# files: their rows stage here, under the table's metadata dir where no
+# scan looks, until each leaf moves in under a fresh name. A crashed
+# rewrite's leftover staging dir is swept by vacuum_table (age-gated).
+STAGING_DIR = "staging"
+
+# Table-level keys a rewrite carries verbatim: it replaces files, never
+# the table's contracts, declarations or metadata.
+_REWRITE_CARRIED_KEYS = (
+    "schema", "indexes", "constraints", "tags", "properties",
+    "schema_mapping", "column_attributes", "column_aliases",
+    "logical_columns", "ndv_columns", "sum_columns", "histogram_columns",
+)
+
+
+def _completed_entries(path: str, m: dict, entries: list[dict], redescribe=None) -> list[dict]:
+    """``entries`` with every stat the manifest promises: an entry
+    without null counts or min/max (or one ``redescribe`` names) is
+    described again from its footer, and a local entry missing a
+    declared NDV/SUM/histogram synopsis gains it. Complete entries pass
+    through as the same objects (they are shared with the manifest
+    cache: never mutated); the rest are done in parallel — footer reads
+    and hashing release the GIL."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    stat_cols = _stat_cols(T.StructType.fromJson(m["schema"]))
+    declared = {"ndv": m.get("ndv_columns"), "sums": m.get("sum_columns"),
+                "hist": m.get("histogram_columns")}
+
+    def stale(e: dict) -> bool:
+        return "nulls" not in e or "min" not in e or bool(redescribe and redescribe(e))
+
+    def missing(e: dict) -> list[str]:
+        if os.path.isabs(e["path"]):
+            return []  # foreign (shallow-clone) file: the source owns it
+        return [k for k, cols in declared.items() if cols and k not in e]
+
+    def complete(e: dict) -> dict:
+        if stale(e):
+            e = _describe_parquet_file(os.path.join(path, e["path"]), path, stat_cols)
+        need = missing(e)
+        if not need:
+            return e
+        got = dict(zip(("ndv", "sums", "hist"), _synopses_of_file(
+            os.path.join(path, e["path"]),
+            *(declared[k] if k in need else None for k in ("ndv", "sums", "hist")),
+        )))
+        return dict(e, **{k: got[k] for k in need})
+
+    out = list(entries)
+    todo = [i for i, e in enumerate(out) if stale(e) or missing(e)]
+    with ThreadPoolExecutor(max_workers=8) as pool:
+        for i, e in zip(todo, pool.map(complete, [out[i] for i in todo])):
+            out[i] = e
+    return out
+
+
+def _stage_rewrite(
+    spark: SparkSession,
+    path: str,
+    m: dict,
+    df: DataFrame,
+    mode: str,
+    into: Optional[str] = None,
+    compression: str = "zstd",
+) -> list[dict]:
+    """Write ``df`` (physical column names) as new files of the table
+    at ``path`` and return their manifest entries, unpublished.
+
+    The frame is written with the table's own writer options — the
+    compression, the bloom index columns and, when ``into`` is None,
+    the directory layout: Hive partition keys plus the hash-bucket
+    column recomputed with the writer's exact formula, so every row
+    lands in the directory its lookups prune to. ``into`` names the
+    leaf directory of a group rewritten in place (compaction,
+    recluster); the frame is then written flat and lands there (an
+    absolute, shallow-clone directory lands at this table's root).
+
+    Rows stage under ``_nimble/staging/<mode>-<uuid>``; each leaf moves
+    under its target directory as ``<mode>-<uuid>-<leaf>``. Only those
+    files are described (with their synopses), so debris of an earlier
+    crashed attempt is never adopted. Empty outputs are deleted."""
+    idx = m.get("indexes", {})
+    layout: list[str] = []
+    if into is None:
+        layout = list((idx.get("partition") or {}).get("keys") or [])
+        h = idx.get("hash")
+        if h:
+            df = df.withColumn(
+                BUCKET_COL, F.pmod(F.xxhash64(F.col(h["key"])), F.lit(h["n_buckets"]))
+            )
+            layout.append(BUCKET_COL)
+    elif os.path.isabs(into):
+        into = ""
+    writer = df.write.mode("overwrite").option("compression", compression)
+    for c in (idx.get("bloom") or {}).get("keys", []):
+        writer = writer.option(f"parquet.bloom.filter.enabled#{c}", "true")
+    if layout:
+        writer = writer.partitionBy(*layout)
+    staging = os.path.join(path, MANIFEST_DIR, STAGING_DIR, f"{mode}-{uuid.uuid4().hex}")
+    moved: list[str] = []
+    try:
+        writer.parquet(staging)
+        for root, dirs, names in os.walk(staging):
+            dirs.sort()
+            rel_dir = os.path.normpath(os.path.join(into or "", os.path.relpath(root, staging)))
+            for f in sorted(names):
+                if not f.endswith(".parquet"):
+                    continue
+                rel = os.path.normpath(os.path.join(rel_dir, f"{mode}-{uuid.uuid4().hex[:8]}-{f}"))
+                os.makedirs(os.path.dirname(os.path.join(path, rel)), exist_ok=True)
+                os.rename(os.path.join(root, f), os.path.join(path, rel))
+                moved.append(rel)
+    finally:
+        shutil.rmtree(staging, ignore_errors=True)
+    entries = _completed_entries(path, m, [{"path": rel} for rel in moved])
+    for e in entries:
+        if e["rows"] == 0:
+            os.remove(os.path.join(path, e["path"]))
+    return [e for e in entries if e["rows"] > 0]
+
+
+def _publish_rewrite(
+    path: str,
+    m: dict,
+    replaced: Iterable[str],
+    added: dict[Optional[str], list[dict]],
+    mode: str,
+    data_change: bool = True,
+    user_md: Optional[dict] = None,
+) -> dict:
+    """The commit of every copy-on-write rewrite: publish the manifest
+    ``m`` minus the ``replaced`` relpaths plus the ``added`` entries,
+    atomically and BEFORE any replaced file moves, then tombstone the
+    replaced files into ``_nimble/trash/commit-N``.
+
+    ``added`` maps an anchor to its new entries: entries anchored at a
+    replaced file splice in at that position (compaction, recluster and
+    deepen keep the manifest order — the cluster range order and
+    row_range positions); entries anchored at None go after the
+    survivors (merge, update, partition overwrite).
+
+    Every table-level key in ``_REWRITE_CARRIED_KEYS`` carries, and so
+    do the user metadata (``user_md`` merged in) and the still-live
+    consumed-mask fence; ``write_stats`` is recomputed from the new
+    layout. Survivors without full stats or declared synopses are
+    completed. A data-changing rewrite over a pre-STATS_GEN manifest
+    re-describes its survivors and stamps the current gen; a
+    ``data_change=False`` one (layout only: snapshot replays apply it,
+    CDC and stream consumers skip it) carries the prior gen.
+
+    The publish states its base log, so a streaming micro-batch that
+    lands meanwhile is folded in, not erased. A crash before the
+    publish leaves the old table (staged files are unreferenced debris
+    for vacuum); after it, replaced files still at their original paths
+    stay readable to snapshot reads until they reach the trash."""
+    from nimble_spark.sources.deletes import carry_consumed_masks
+
+    gone = {os.path.normpath(p) for p in replaced}
+    fresh = {e["path"] for v in added.values() for e in v}
+    regen = data_change and m.get("stats_gen", 1) < STATS_GEN
+    files: list[dict] = []
+    for f in m["files"]:
+        rel = os.path.normpath(f["path"])
+        if rel in added:
+            files.extend(added[rel])
+        elif rel not in gone:
+            files.append(f)
+    files.extend(added.get(None, []))
+    files = _completed_entries(
+        path, m, files, redescribe=lambda e: regen and e["path"] not in fresh
+    )
+    prior = list(m.get("commits", []))
+    n = _next_commit(prior)
+    rows = sum(f["rows"] for f in files)
+    commit: dict[str, Any] = {"commit": n, "mode": mode}
+    if not data_change:
+        commit["data_change"] = False
+    commit.update(
+        files_added=len(fresh),
+        files_removed=len(gone),
+        removed=sorted(gone),
+        rows_added=rows - sum(c.get("rows_added", 0) for c in prior) if data_change else 0,
+        files=sorted(fresh),
+    )
+    new_m = {
+        "format_version": 1,
+        "stats_gen": STATS_GEN if data_change else m.get("stats_gen", 1),
+        **{k: m[k] for k in _REWRITE_CARRIED_KEYS if k in m},
+        "rows": rows,
+        "files": files,
+        "column_stats": _fold_column_stats(files),
+        "user_metadata": {**m.get("user_metadata", {}), **(user_md or {})},
+        "write_stats": dict(m.get("write_stats", {}), **_layout_stats(files)),
+        "commits": prior + [commit],
+    }
+    consumed = carry_consumed_masks(path, m)
+    if consumed:  # dead-mask fence survives until its dirs are reclaimed
+        new_m["consumed_masks"] = consumed
+    _write_manifest(path, new_m, base_commits=prior)
+
+    fs = get_fs()
+    # named by the COMMIT NUMBER (after expire_snapshots the log position
+    # diverges and could reuse a pre-expiry dir name)
+    trash = os.path.join(path, MANIFEST_DIR, "trash", f"commit-{n}")
+    fs.makedirs(trash)
+    for rel in sorted(gone):
+        if os.path.isabs(rel):
+            continue  # foreign (shallow-clone) file: the source owns the bytes
+        src = os.path.join(path, rel)
+        # the relpath is kept: resolve_historical_file globs
+        # trash/commit-*/<rel>, so partition subdirs must survive
+        dst = os.path.join(trash, rel)
+        fs.makedirs(os.path.dirname(dst))
+        try:
+            fs.move(src, dst)
+        except FileNotFoundError:
+            pass  # already gone (moved by another actor); the published
+            # manifest no longer names it, so there is nothing to keep
+        crc = os.path.join(os.path.dirname(src), f".{os.path.basename(src)}.crc")
+        if os.path.exists(crc):
+            os.remove(crc)
+    return new_m
+
+
 def expire_snapshots(path: str, keep_last: int) -> dict:
     """Bound commit-log growth (Iceberg expireSnapshots analogue):
     fold every commit older than the newest ``keep_last`` into a

@@ -83,6 +83,8 @@ def test_crash_between_publish_and_trash_leaves_table_readable(spark, tmpdir, mo
     version and fully readable; the not-yet-trashed replaced files are
     unreferenced debris that vacuum reclaims."""
     import nimble_spark.sources.merge as merge_mod
+    # the copy-on-write publisher lives in table.py
+    import nimble_spark.sources.table as table_mod
 
     path = f"{tmpdir}/crashy"
     df = spark.range(200).selectExpr("id AS k", "id * 2 AS v")
@@ -98,13 +100,13 @@ def test_crash_between_publish_and_trash_leaves_table_readable(spark, tmpdir, mo
             raise OSError("simulated crash during trash move")
         return real_rename(src, dst)
 
-    real_publish = merge_mod._write_manifest
+    real_publish = table_mod._write_manifest
 
     def tracking_publish(p, manifest, **kwargs):
         real_publish(p, manifest, **kwargs)
         state["published"] = True
 
-    monkeypatch.setattr(merge_mod, "_write_manifest", tracking_publish)
+    monkeypatch.setattr(table_mod, "_write_manifest", tracking_publish)
     monkeypatch.setattr(merge_mod.os, "rename", crashing_rename)
     try:
         merge_mod.update_where(spark, path, "k < 50", {"v": "v + 7"})

@@ -24,16 +24,15 @@ ALLOWED = {
     # authoritative read
     "sources/datasource.py": 2,  # + abort() cleanup: debris is excluded
     # by the stray sweep and reclaimed by vacuum
-    # compaction + rollback tombstone moves: source already gone means
-    # another actor (crash replay, earlier rename) moved it — the
-    # manifest, already published, is the source of truth; plus the
-    # maintenance advisor's trash-size probe racing a vacuum (the size
-    # is advisory evidence, never a correctness input)
-    "sources/compaction.py": 2,
+    # compaction.py: the maintenance advisor's trash-size probe racing
+    # a vacuum (the size is advisory evidence, never a correctness
+    # input)
+    "sources/compaction.py": 1,
     # table.py: prior-root probe before the first sharded publish, and
-    # the rollback tombstone move (source already gone = another actor
-    # moved it; the published manifest is the source of truth)
-    "sources/table.py": 2,
+    # the rollback and copy-on-write rewrite tombstone moves (only
+    # FileNotFoundError: source already gone = another actor moved it;
+    # the published manifest is the source of truth)
+    "sources/table.py": 3,
     # fs.py (the commit lock moved here with the metadata-FS seam, r7):
     # lock release (inode mismatch = nothing of ours to free),
     # lost-contention tombstone keep, and the liveness probe's EPERM

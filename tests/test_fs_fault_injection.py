@@ -47,7 +47,11 @@ import shutil
 import pytest
 
 from nimble_spark.sources.alter import alter_table
-from nimble_spark.sources.compaction import compact_table, vacuum_table
+from nimble_spark.sources.compaction import (
+    compact_table,
+    recluster_table,
+    vacuum_table,
+)
 from nimble_spark.sources.deletes import (
     compact_deletes,
     delete_rows,
@@ -214,6 +218,15 @@ def _ops(spark):
             None,
             lambda p: compact_table(spark, p, target_file_bytes=64 * 1024 * 1024),
         ),
+        # the fixture's appended keys sit past the clustered ranges, so
+        # the setup appends keys inside both of them: the incremental
+        # recluster then rewrites exactly those two overlap components
+        "recluster_incremental": (
+            lambda p: write_table(
+                _df(spark, [(2, 1), (9, 2)]), p, WriteOptions(), mode="append"
+            ),
+            lambda p: recluster_table(spark, p, incremental=True),
+        ),
         "alter_rename": (
             None,
             lambda p: alter_table(p, rename={"v": "val"}),
@@ -322,7 +335,7 @@ def _sweep(spark, tmpdir, base_fs, op_name):
 
 
 OP_NAMES = ["append", "update", "merge", "compact_deletes", "compact",
-            "alter_rename", "rollback", "overwrite",
+            "recluster_incremental", "alter_rename", "rollback", "overwrite",
             "delete_rows", "delete_where", "apply_changes_deletes"]
 
 

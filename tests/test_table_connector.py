@@ -656,6 +656,15 @@ def test_merge_into_rewrites_only_affected_files(spark, tmpdir):
     assert back.filter(F.col("o_orderstatus") == "I").count() == 2
     # no duplicate keys after the upsert
     assert back.select("o_orderkey").distinct().count() == back.count()
+    # the trashed files took their checksum sidecars with them: every
+    # .crc left in the table dir belongs to a live parquet file
+    import os
+
+    for root, dirs, names in os.walk(path):
+        dirs[:] = [d for d in dirs if d != "_nimble"]
+        for n in names:
+            if n.endswith(".parquet.crc"):
+                assert n[1:-4] in names, f"orphan checksum {n}"
 
     # change feed: the merge commit's additions are exactly its new files
     ch = read_changes(spark, path, since_commit=m1["commits"][-2]["commit"])
